@@ -17,7 +17,12 @@ Contract notes (see /root/repo/__spark_entry__.py):
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,280 +49,47 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-#: Entries pushed to the BACK of the registry order. The driver verifies
-#: exactly the first 50 registered names per round; demoted entries get no
-#: driver correctness row that round.
-#:
-#: ROTATION POLICY (encoded in tests/test_harness_window.py, adopted round
-#: 5 per the r04 verdict): the window is a RE-VERIFICATION cadence, not a
-#: one-shot ledger. Priority for the 50 live slots each round:
-#:   1. entries with NO driver row yet (new registrations);
-#:   2. entries whose depended-on code changed since their last driver row
-#:      (a local parity run is evidence, a driver row is the hard signal);
-#:   3. everything else, oldest last-driver-row first.
-#: Consequently no demoted entry's last green driver row may be more than
-#: 2 rounds behind the newest CORRECTNESS file — mechanically asserted by
-#: test_demoted_entries_within_staleness_budget, so a forgotten rotation
-#: fails the suite, not the judge.
-#:
-#: Round-15 rotation — BACKBONE ROUND (executing the r14 verdict's #1,
-#: the binding obligation pre-committed in the r14 docstring): the 46
-#: r12-green trail-2 entries (recent_extract through
-#: audio_cdc_gain_near_dups) are LIVE this round — 45 verbatim, the
-#: 46th via its merge successor: the PRE-COMMITTED r15 MERGE landed,
-#: image_cdc_crop_near_dups (r12 cohort, due) + video_cdc_crop_near_dups
-#: (r13 cohort) → media_cdc_crop_near_dups (variant rows
-#: 'image'/'video', both fixtures and oracles VERBATIM in the UNION;
-#: retirement rationale in the successor's docstring,
-#: harness_streaming.py). That fills 46 of the 50 slots; the 4
-#: remaining are budgeted this round as:
-#:   - rule 1: kn_bigram_logprob (NEW gate, pre-committed r14 — the
-#:     interpolated Kneser-Ney perplexity scorer built+tested r14;
-#:     oracle = direct SQL replay of the four count CTEs + the KN
-#:     formula, float-safe because the scorer has no interior argmax);
-#:   - rule 1: near_dup_decontamination (NEW gate, pre-committed r14 —
-#:     cross-frame banded MinHash + exact-Jaccard verify built+tested
-#:     r14; portable hash mode, the minhash_lsh_near_dups replay with
-#:     per-side CTEs and a cross-side band join);
-#:   - rule 2: url_canonical_dedup (the r14 ADVICE :443 fix landed in
-#:     canonicalize_url — http strips only ITS OWN default :80 now, so
-#:     http://h:443 keeps scheme AND port; gate fixture extended
-#:     QUINT→SEXT with the must-not-fold :443 member);
-#:   - rule 1: ccnet_perplexity_buckets (NEW gate, built r15 — the
-#:     published CCNet head/middle/tail stage composing the KN scorer
-#:     per-language; integer-exact floor split on the ROUND-6 score
-#:     with doc_id tiebreak). It takes slot 50, displacing the
-#:     OPTIONAL top_avg_volatility early refresh (that entry stays
-#:     first in the demoted list: r13-green, due r16 with its cohort
-#:     — the r16 crunch is 47 due + 3 spare).
-#: Demoted below: the r13-green entries (trail 2 at r15 — due and
-#: PRE-COMMITTED live at r16, first block) and the r14-verified
-#: entries (trail 1, due r17, second block; url_canonical_dedup is
-#: commented out of it while live under rule 2).
-#: Registry after the merge + 3 new gates: 146/150.
-#: r16 NEW-GATE CANDIDATES (operators + pytests landed r15, gates
-#: deferred — the r15 window is exactly full): operators/dedup.
-#: minhash_estimated_pairs — the signature-only Jaccard-estimator
-#: verify tier (Broder's resemblance estimator; no gram rehydration
-#: past the signature agg) — and operators/dedup.minhash_triage_pairs
-#: — the composed estimate/exact-borderline pipeline on top of it.
-#: Oracle plan: ONE multi-variant gate ('estimate'/'triage' rows)
-#: built on the minhash_lsh_near_dups portable replay with the
-#: per-pair agreement count as an unrolled 32-term CASE sum (integer
-#: n_agree; ROUND-6 estimate at the edge; every cut on the integer
-#: count; the triage variant adds the borderline-only gram CTE) —
-#: one slot funds both operators, keeping r16 at 47 due + 3 spare.
-#: The oracle SQL was SCRATCH-VALIDATED r15 at sf0.01 (32-term CASE
-#: agreement sum over per-pair sig joins; est/triage-accept/borderline
-#: UNION; hash MATCH vs both operators in portable mode) with ONE
-#: caveat: the natural corpus puts ZERO pairs in the borderline band
-#: at threshold 0.5 / margin 0.125 (planted near-dups are near-exact,
-#: n_agree >= 20) — the gate fixture MUST plant shared-prefix
-#: borderline families (true J ~ 0.5, the doc_jaccard pattern) so the
-#: exact-verdict path is exercised, not a 0-row accident (the
-#: near_dup_decontamination fixture lesson).
-#: Second r16 candidate (operator + stream≡batch pytests landed r15):
-#: streaming decontamination-at-ingest (streaming/windows.
-#: contamination_pregate_flags — stateless in-plan Bloom pre-verdict,
-#: exactly-clean majority — + streaming/io.run_decontaminate_to_parquet
-#: — per-micro-batch exact verify + clean/quarantine router). Gate
-#: shape: the streaming_dedup_ingest file-replay pattern with the
-#: doc_contamination_dual SQL as the batch-twin oracle. SCRATCH-
-#: VALIDATED r15 at sf0.01: corpus = docs %25!=7 with planted exact
-#: copies (%25==8, of the id-interleaved bench text) and one-gram
-#: overlaps (%25==9, 'zz yy eval item k qq rr'), bench = %25==7
-#: id-interleaved texts; 3 doc_id-ranged micro-batch files through
-#: run_decontaminate_to_parquet; output = ('quarantine', doc_id,
-#: n_overlap) UNION ('clean', doc_id, NULL); oracle = construction
-#: CASE + distinct-gram intersect counts — hash MATCH (480 rows, 40
-#: quarantined: both planted classes recovered, no stream/batch
-#: divergence).
-#: Third r16 candidate (operator + sequential-reference differential
-#: landed r15): operators/packing.pack_sequences_spfhp — SPFHP
-#: whole-document packing (Krell et al. 2021). Oracle plan: a PLANTED
-#: length construction whose SPFHP solution is closed-form (perfectly
-#: tiling length classes from doc_id arithmetic), so the oracle
-#: derives pack composition/fill from the construction (the r10
-#: independent-formulation rule, the url gate precedent) — never by
-#: re-running the solver in SQL. SCRATCH-VALIDATED r15 at sf0.01:
-#: docs %17 in {3,4,5} planted at 64/32/48 tokens, budget 96 — the
-#: SPFHP solution is provably unique ((64,32) perfect pairs, 48s
-#: self-pack in pairs + odd singleton) and the per-doc
-#: (pack_id, pack_offset, pack_fill) is pure ROW_NUMBER arithmetic
-#: (64 rank r → pack r off 0; 32 rank r → pack r off 64; 48 rank r →
-#: pack n64 + r div 2, off (r%2)*48) — hash MATCH vs the operator. r16 slot math if all three land:
-#: 47 due + 3 new = 50 exactly, zero spare — land at most two unless
-#: no rule-2 debts exist at rotation time.
-#: r16-ROTATION maintenance item (r15 review #1, deliberately NOT
-#: landed mid-r15 — the full-window freeze rule): roll _check_bands
-#: out to the OLDER minhash surfaces (minhash_dedup_pairs,
-#: minhash_index, minhash_probe, minhash_containment_pairs), which
-#: still truncate silently when bands does not divide num_hashes.
-#: The change is output-neutral for every gate (all use 32/8 —
-#: pytest-provable), but it reaches the dependency chains of
-#: minhash_lsh_near_dups (r15-green), doc_incremental_probe and
-#: doc_containment_pairs (r14-green): land it AT the r16 rotation
-#: and record the rule-2 judgment there (either re-enter the two
-#: r14-green gates early, or record the output-neutrality argument
-#: explicitly — judged at rotation time as the window test header
-#: prescribes).
-#: PRE-COMMITTED r16 MERGE (funds a slot + ceiling headroom):
-#: doc_near_dup_triangles + doc_near_dup_triangles_degree →
-#: near_dup_triangles_multi. The pair shares ONE oracle string
-#: (identical unrolled SQL — orientation never changes the triangle
-#: set), one operator (graph.triangles, orient='asc'/'degree') and
-#: one input pipeline (edit_distance_near_dups); green together
-#: since their landing round. Successor: variant rows 'asc'/'degree',
-#: both builders verbatim, the shared oracle duplicated per variant
-#: (the media_cdc precedent). Both are r13-green (due r16), so the
-#: successor takes one of their backbone slots under rule 1 and
-#: carries the other's refresh: r16 becomes 46 due + merge successor
-#: + up to 3 new = 50, registry 146 → 145 before new gates.
-#: r17-PIPELINE candidate (operator + reference-differential pytests
-#: landed r15; r16 is already slot-saturated): operators/similarity.
-#: bitext_margin_mining — the Artetxe & Schwenk ratio-margin bitext
-#: miner; oracle = the _COS_SQL + ROW_NUMBER replay on embeddings
-#: with sides split by label parity (every selection already on
-#: ROUND-6 + id tiebreaks, so the replay is mechanical).
-#: r15-OPTIMIZATION rule-2 debts (recorded at the optimization round,
-#: to be serviced at the r16 rotation): the optimization round changed
-#: operator INTERNALS under two demoted r14-cohort gates —
-#: doc_duplicate_span_removal (interval coverage + xxhash64-pair span
-#: keys) and dsir_importance_weights (bucket-histogram checkpoint) —
-#: both emulator-verified green at sf0.01 this round (incl.
-#: TZ=Asia/Tokyo for the span gate), but a DRIVER row on the new code
-#: is the hard signal: re-enter both EARLY at r16 under rule 2 (they
-#: ride the same slots the r16 crunch already budgets spare for).
-#: doc_duplicate_spans and doc_dedup_clusters also changed and are
-#: r13-green — due live at r16 anyway, no extra slot needed. Every
-#: other corpus gate's chain was touched only through util.fan_out,
-#: whose gate-fixture path (single-file input → the unconditional
-#: branch) is provably byte-identical; the live-window r15 driver rows
-#: cover the changed branch at every multi-file tier the bench runs.
-#: (Round-12/13/15 history — merges funding rule-1/rule-2 slots —
-#: lives in the ledgers and VERDICTs; merged gates' docstrings carry
-#: their retirement rationales.)
-_WINDOW_DEMOTED = [
-    # --- r13-green, trail 2 at r15: the PRE-COMMITTED r16 backbone
-    # (all 46 still listed here MUST be live the moment
-    # CORRECTNESS_r16.json lands; any whose depended-on code changes
-    # mid-r15 re-enters EARLY under rule 2 and still counts).
-    # top_avg_volatility stays FIRST: it briefly held live slot 50
-    # this round until the ccnet gate registered (50 non-demoted
-    # entries now), so it refreshes at r16 with its cohort ---
-    "top_avg_volatility",
-    "pricing_summary",
-    "ticker_metrics",
-    "volume_leaders",
-    "star_revenue",
-    # url_canonical_dedup: LIVE at r15 under rule 2 (the :443 no-fold
-    # fix landed in canonicalize_url per ADVICE r14 #1) — re-joins
-    # the r17 cohort after
-    "doc_jaccard_near_dups",
-    "embedding_topk",
-    "embedding_near_dups",
-    "price_percentiles",
-    "windowed_event_kpis",
-    "embedding_topk_lsh",
-    "approx_event_stats",
-    "curated_corpus",
-    "doc_dedup_clusters",
-    "reorder_within_30d",
-    "doc_pii_redaction",
-    "qty_cube",
-    "event_value_outliers",
-    "view_click_attribution",
-    "doc_length_deciles",
-    "doc_near_dup_triangles",
-    "doc_near_dup_triangles_degree",
-    "price_trend_regression",
-    "customer_tier_scd2",
-    "trailing_7d_avg_price",
-    "doc_token_entropy",
-    "corpus_lang_source_chi2",
-    "multimodal_frame_sample",
-    "doc_weighted_sample",
-    "doc_lang_rebalance",
-    "ticker_stats_unpivot",
-    "doc_duplicate_spans",
-    "events_daily_ffill",
-    "hll_user_rollup",
-    "order_price_percent_rank",
-    "multimodal_video_frames_real",
-    "video_near_dups",
-    "doc_paragraph_dedup",
-    "c4_line_filter",
-    "media_pair_bucket_audit",
-    "embedding_semantic_dedup",
-    "gopher_quality_flags",
-    "streaming_dedup_ingest",
-    "embedding_contrastive_negatives",
-    "token_budget_corpus_select",
-    # video_cdc_crop_near_dups: RETIRED at the r15 rotation — merged
-    # with image_cdc_crop_near_dups into media_cdc_crop_near_dups
-    # (live, rule 1); its fixture + oracle run verbatim as the
-    # 'video' variant row
-    "streaming_pct_change_multi",
-    "multimodal_corpus_prep_multi",
-    # --- r14-verified, trail 1 (due r17; slack slots at r16 can start
-    # refreshing the oldest of these early) ---
-    "weekly_volatility",
-    "market_overview",
-    "ticker_report_stats",
-    "segment_balance",
-    "distinct_counts",
-    "customer_big_order_split",
-    "dim_snapshots",
-    # url_canonical_dedup: LIVE at r15 under rule 2 (see above)
-    "quality_gate_exact",
-    "fk_orphan_check",
-    "brand_scores",
-    "returnflag_correlation",
-    "latest_event_per_user",
-    "events_json_kpi",
-    "doc_token_stats",
-    "multimodal_features",
-    "sql_api_nation_rank",
-    "rolling_close_avg",
-    "qty_rollup",
-    "customer_set_ops",
-    "status_flag_pivot",
-    "sliding_window_kpis",
-    "pricey_parts_vs_brand_avg",
-    "customer_order_coverage",
-    "top_performers",
-    "train_test_split",
-    "doc_chunks",
-    "doc_contamination_dual",
-    "doc_incremental_probe",
-    "doc_bm25_topk",
-    "doc_bigram_logprob",
-    "doc_edit_distance_near_dups",
-    "doc_containment_pairs",
-    "multimodal_image_codec_real",
-    "image_phash_multi_near_dups",
-    "audio_multi_near_dups",
-    "html_text_extract",
-    "dsir_importance_weights",
-    "bpe_pipeline",
-    "weekly_user_kmv_rollup",
-    "streaming_windowed_media_dedup",
-    "cross_doc_ngram_overlap",
-    "doc_nb_lang_classifier",
-    "corpus_prep_pipeline",
-    "file_roundtrip_ingest",
-    "term_heavy_hitters",
-    "weekly_value_quantile_rollup",
-    "doc_duplicate_span_removal",
-    "unicode_fold_dedup",
-    "unigram_lm_tokenizer",
-]
-
-#: The driver verifies exactly this many leading registry entries per round.
+#: The driver verifies exactly this many leading entries of :func:`queries`
+#: per round.
 _DRIVER_WINDOW = 50
 
+#: Directory holding the driver's ``CORRECTNESS_r<N>.json`` ledger.
+_LEDGER_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-from contextlib import contextmanager
+
+def _last_green_rounds(ledger_dir: str) -> dict[str, int]:
+    """Entry -> newest ledger round whose driver row for it is fully green
+    (rows, schema and hash match, no error; a NULL hash is a rows-only
+    entry). Entries never green are absent."""
+    last: dict[str, int] = {}
+    for path in glob.glob(os.path.join(ledger_dir, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"CORRECTNESS_r(\d+)\.json$", path).group(1))
+        with open(path) as f:
+            rows = json.load(f)
+        for name, row in rows.items():
+            if (
+                row.get("rows_match") is True
+                and row.get("schema_match") is True
+                and row.get("hash_match") in (True, None)
+                and row.get("err") in (None, "")
+            ):
+                last[name] = max(last.get(name, 0), rnd)
+    return last
+
+
+def _window_order(d: dict) -> dict:
+    """``d`` in driver-window order: never-verified entries first, then the
+    oldest last-green round first; ties keep registration order."""
+    return dict(sorted(d.items(), key=lambda kv: _LAST_GREEN.get(kv[0], 0)))
+
+
+def queries() -> dict[str, QueryFn]:
+    return _window_order(_QUERIES)
+
+
+def oracles() -> dict[str, str]:
+    return _window_order(_ORACLES)
+
 
 
 @contextmanager
@@ -361,37 +133,6 @@ def _next_stream_seq() -> int:
     global _STREAM_GATE_SEQ
     _STREAM_GATE_SEQ += 1
     return _STREAM_GATE_SEQ
-
-
-def _window_order(d: dict) -> dict:
-    demoted = [n for n in _WINDOW_DEMOTED if n in d]
-    return {
-        **{k: v for k, v in d.items() if k not in _WINDOW_DEMOTED},
-        **{n: d[n] for n in demoted},
-    }
-
-
-def _check_window_fit() -> None:
-    """Fail LOUDLY if non-demoted entries outgrow the driver's window —
-    otherwise a newly registered query silently falls past slot 50 and
-    never earns a driver correctness row."""
-    n_live = len(_QUERIES) - sum(1 for n in _WINDOW_DEMOTED if n in _QUERIES)
-    if n_live > _DRIVER_WINDOW:
-        raise RuntimeError(
-            f"{n_live} non-demoted harness entries exceed the "
-            f"{_DRIVER_WINDOW}-query driver window; demote more "
-            "twice-driver-verified entries in harness._WINDOW_DEMOTED"
-        )
-
-
-def queries() -> dict[str, QueryFn]:
-    _check_window_fit()
-    return _window_order(_QUERIES)
-
-
-def oracles() -> dict[str, str]:
-    _check_window_fit()
-    return _window_order(_ORACLES)
 
 
 # ---------------------------------------------------------------------------
@@ -442,16 +183,9 @@ WITH changes AS (
 """
 
 # ---------------------------------------------------------------------------
-# Flagship chain (W1 W2 F1 F7 A3 P3 A5 O1)
-# ---------------------------------------------------------------------------
-
-
-# ---------------------------------------------------------------------------
-# Tier modules (r12 split, r11 verdict #8): the registry is ASSEMBLED by
-# importing one module per tier IN ORDER — each @register call lands in
-# _QUERIES/_ORACLES exactly as it did in the monolith, so the driver's
-# 50-slot window membership and the CORRECTNESS ledger keys are
-# unchanged. Import order IS the registration order; do not reorder.
+# Tier modules: the registry is assembled by importing one module per tier.
+# Import order is the registration order, which breaks ties in the window
+# order; the ledger is read once, after every tier has registered.
 # ---------------------------------------------------------------------------
 
 from . import harness_parity  # noqa: E402,F401
@@ -463,3 +197,8 @@ from . import harness_streaming  # noqa: E402,F401
 
 # driver-entry surface: __spark_entry__.entry() runs harness.flagship
 from .harness_parity import flagship  # noqa: E402,F401
+
+_LAST_GREEN = _last_green_rounds(_LEDGER_DIR)
+
+#: Entries past the driver window: they get no driver row this round.
+_WINDOW_DEMOTED = list(queries())[_DRIVER_WINDOW:]

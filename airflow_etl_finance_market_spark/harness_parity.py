@@ -2,14 +2,10 @@
 queries, quality gates, dims, and URL provenance gates (SURVEY.md
 S/P/J/A/W/O/F rows).
 
-One CONTIGUOUS slice of the registry in REGISTRATION ORDER —
-the driver-ledger contract: ``harness.py`` imports the tier
-modules in sequence, so ``queries()``/``oracles()`` keep the
-exact pre-split ordering (the 50-slot window membership is
-pinned by tests/test_harness_window.py). Slices are cut at
-registration boundaries, so a handful of entries sit with
-their chronological neighbors rather than their thematic kin
-— ordering is the contract, theming is the map.
+One slice of the registry. ``harness.py`` imports the tier
+modules in sequence; that registration order only breaks ties in
+the driver-window order ``harness.py`` derives from the
+CORRECTNESS ledger.
 """
 
 from __future__ import annotations

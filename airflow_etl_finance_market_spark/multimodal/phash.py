@@ -46,12 +46,8 @@ AQE-split. At 100 TB of media the hash stage streams the binary column
 once and the join runs over the 8-byte hash table, not pixels. The
 default split's random-collision candidates grow as ~n^2/2048 — fine
 to ~10^7 items, the join's own cost at 10^8+; before a run that big,
-audit with :func:`block_bucket_stats` and switch the pair stage to the
-exact MULTI-INDEX mode (``n_blocks=3, block_ball=1`` — wider blocks,
-single-bit-flip probes, same exact radius, ~28x fewer candidates; see
-:func:`_block_candidates`), and collapse identical signatures to one
-representative first (exact-dup masses are the one skew no bucketing
-scheme can scatter).
+collapse identical signatures to one representative first (exact-dup
+masses are the one skew no bucketing scheme can scatter).
 """
 
 from __future__ import annotations
@@ -63,6 +59,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
+
+from ..operators.dedup import _block_candidates
+from ..operators.dedup import hamming_near_pairs as _hamming_near_pairs
 
 #: Output schema of the dHash stage (the pHash stage emits the same
 #: shape with a ``phash`` column — see ``_image_signature_stage``).
@@ -316,7 +315,7 @@ def image_dhash(
     over from the source, so a 100 TB media table hashes with zero data
     movement and 8 output bytes per image. ``passthrough`` columns are
     copied verbatim (the streaming dedup caller's event-time column must
-    survive this stage — see ``audio.audio_fingerprints``).
+    survive this stage — see ``streaming.dedup_by_signature``).
     """
     kernel = _dhash_kernel()
     if mirror_canonical:
@@ -416,314 +415,11 @@ def _image_signature_stage(
     ).mapInPandas(_hash, schema=schema)
 
 
-def _block_rows(
-    sigs: DataFrame, *, sig_col: str, n_blocks: int, n_bits: int
-) -> DataFrame:
-    """Pigeonhole block rows: explode each signature into ``n_blocks``
-    ``(block_idx, block_val)`` rows, keeping every input column.
-
-    THE pigeonhole contract lives here (one implementation for the
-    image-pair, video-overlap, and tile-overlap paths — the r08 verdict
-    asked for the two copies to merge): two ``n_bits`` signatures within
-    Hamming distance ``n_blocks - 1`` must agree on at least one block,
-    so a ``(block_idx, block_val)`` equi-join over these rows is an
-    EXACT candidate generator for ``max_hamming <= n_blocks - 1``.
-    Remainder bits (``n_bits`` not divisible by ``n_blocks``) widen the
-    LAST block, which only tightens buckets — uncovered bits would also
-    have been safe (all-blocks-equal still collides) but waste
-    selectivity.
-
-    ``sig_col`` must be a REAL column of ``sigs`` (callers alias in a
-    prior select): referencing a column aliased in the SAME select from
-    inside ``posexplode`` would be a lateral column alias, which
-    generator expressions reject at resolution time.
-    """
-    width = n_bits // n_blocks
-    shifts = [width * j for j in range(n_blocks)]
-    widths = [width] * (n_blocks - 1) + [n_bits - width * (n_blocks - 1)]
-
-    def _block(sh: int, w: int):
-        shifted = F.shiftrightunsigned(F.col(sig_col), sh)
-        if w >= 64:
-            # full-width block (n_blocks=1, the max_hamming=0 exact
-            # path): the mask literal (1<<64)-1 overflows a Java long
-            # and the AND would be the identity anyway
-            return shifted
-        return shifted.bitwiseAND(F.lit((1 << w) - 1))
-
-    return sigs.select(
-        "*",
-        F.posexplode(
-            F.array(*[_block(sh, w) for sh, w in zip(shifts, widths)])
-        ).alias("block_idx", "block_val"),
-    )
-
-
-def _block_widths(n_blocks: int, n_bits: int) -> list[int]:
-    """Per-block bit widths: equal splits, remainder widening the LAST
-    block (the :func:`_block_rows` convention)."""
-    width = n_bits // n_blocks
-    return [width] * (n_blocks - 1) + [n_bits - width * (n_blocks - 1)]
-
-
-def _block_candidates(
-    items: DataFrame,
-    *,
-    n_blocks: int,
-    n_bits: int,
-    ball: int = 0,
-) -> DataFrame:
-    """Candidate pairs for every block-LSH consumer: ``items`` is an
-    ``(id, sig)`` frame; returns ``(id_a, id_b, sig_a, sig_b)`` with
-    ``id_a < id_b`` — the ONE join shape the image / video / tile /
-    audio pair stages all ride (so its cost model is audited once).
-    Rows are NOT deduplicated: a pair colliding in several blocks (or
-    several ball probes) appears once per collision, and each caller
-    applies its own distinct exactly as cheap as its output shape
-    allows. For ``ball=0`` the row count equals
-    :func:`block_bucket_stats`'s ``candidate_pairs`` EXACTLY — the
-    audit query prices this join to the row.
-
-    ``ball=0`` is the classic pigeonhole equi-join on exact block
-    values. ``ball=1`` is the EXACT MULTI-INDEX mode (Norouzi et al.'s
-    multi-index hashing, the r09 verdict's asymptote fix): the probe
-    side additionally emits every single-bit flip of each block value,
-    so two signatures collide when some block matches within Hamming 1
-    — which lets callers use FEWER, WIDER blocks for the same exact
-    recall radius. Why that matters at web scale: with ``n`` items and
-    block width ``w``, expected random-collision candidates grow as
-    ``n_blocks * ball_size * n^2 / 2^w`` — the 5x~13-bit default is
-    ~n^2/2048, invisible at 10^5 items but ~10^12 pairs at 10^9 images,
-    while 3x~21-bit blocks with ball-1 probes are ~n^2/57000 (~28x
-    fewer random collisions; measured 49x on the adversarial skew
-    fixture in tests/test_phash.py and 17.4x on the realistic 150k-
-    image x10 fixture, where planted TRUE near-dup families are
-    candidates under every scheme — see bench.py r10 notes) at a 22/5
-    probe-row premium, and the same radius stays EXACT. Audit the
-    tradeoff with :func:`block_bucket_stats` before choosing.
-    ``ball >= 2`` (even wider blocks) is not implemented — enumerating
-    C(w, 2) flips per block needs a join-free bit-sliced layout to be
-    worth it; raise rather than quietly explode rows.
-
-    Two cost notes callers must know: (1) for ``ball=0`` the two join
-    sides are PLAN-IDENTICAL on purpose, so Spark's ReusedExchange
-    evaluates the upstream signature stage once; (2) for ``ball=1``
-    the probe side is necessarily a different subplan, so an
-    UNPERSISTED signature frame's decode/hash work runs TWICE —
-    ``localCheckpoint()`` or persist the sigs before a multi-index
-    pair run (at web scale they are a written table anyway).
-    """
-    if ball not in (0, 1):
-        raise NotImplementedError(
-            f"per-block Hamming ball radius {ball} not supported "
-            "(0 = exact block match, 1 = single-bit-flip multi-index)"
-        )
-    if ball == 1 and max(_block_widths(n_blocks, n_bits)) > 63:
-        # pow(2.0, 63).cast('long') saturates to Long.MAX_VALUE
-        # (2^63-1) and would silently probe a 62-bit-soup mask instead
-        # of bit 63 (r10 ADVICE). A 64-bit-wide block is n_blocks=1
-        # over a full signature — use ball=0 there.
-        raise NotImplementedError(
-            f"ball=1 block width {max(_block_widths(n_blocks, n_bits))}"
-            " > 63: the flip-mask arithmetic is exact only below the "
-            "signed-long sign bit; split into more blocks or use ball=0"
-        )
-    blocks = _block_rows(
-        items, sig_col="sig", n_blocks=n_blocks, n_bits=n_bits
-    )
-    if ball == 0:
-        # the probe side must be PLAN-IDENTICAL to the index side —
-        # Spark only reuses the shuffled exchange (ReusedExchange) for
-        # byte-equal subplans, and without the reuse the upstream
-        # signature stage (decode + FFT/dHash mapInPandas) evaluates
-        # TWICE, doubling the whole pair chain (caught live in r10:
-        # audio_pairs 1.2 -> 2.1 s from an innocent-looking rename)
-        a, b = blocks.alias("a"), blocks.alias("b")
-        return a.join(
-            b,
-            (F.col("a.block_idx") == F.col("b.block_idx"))
-            & (F.col("a.block_val") == F.col("b.block_val"))
-            & (F.col("a.id") < F.col("b.id")),
-        ).select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.sig").alias("sig_a"),
-            F.col("b.sig").alias("sig_b"),
-        )
-    else:
-        widths = _block_widths(n_blocks, n_bits)
-        # flip = -1 keeps the unflipped value; 0..w-1 flip one bit.
-        # Per-row shift via pow(2, flip) — exact in double for any
-        # power of two up to 2^62, and widths are capped at 63 above
-        # so flip <= 62.
-        probe = (
-            blocks.select(
-                "id",
-                "sig",
-                "block_idx",
-                "block_val",
-                F.explode(
-                    F.array(
-                        *[F.lit(j) for j in range(-1, max(widths))]
-                    )
-                ).alias("flip"),
-            )
-            .filter(
-                (F.col("flip") == -1)
-                | (
-                    F.col("flip")
-                    < F.element_at(
-                        F.array(*[F.lit(w) for w in widths]),
-                        F.col("block_idx").cast("int") + 1,
-                    )
-                )
-            )
-            .select(
-                "id",
-                "sig",
-                "block_idx",
-                F.when(
-                    F.col("flip") >= 0,
-                    F.col("block_val").bitwiseXOR(
-                        F.pow(F.lit(2.0), F.col("flip")).cast("long")
-                    ),
-                )
-                .otherwise(F.col("block_val"))
-                .alias("probe_val"),
-            )
-        )
-    a, b = blocks.alias("a"), probe.alias("b")
-    return a.join(
-        b,
-        (F.col("a.block_idx") == F.col("b.block_idx"))
-        & (F.col("a.block_val") == F.col("b.probe_val"))
-        & (F.col("a.id") < F.col("b.id")),
-    ).select(
-        F.col("a.id").alias("id_a"),
-        F.col("b.id").alias("id_b"),
-        F.col("a.sig").alias("sig_a"),
-        F.col("b.sig").alias("sig_b"),
-    )
-
-
-def block_bucket_stats(
-    sigs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    sig_col: str = "dhash",
-    max_hamming: int = 4,
-    n_bits: int = 64,
-    n_blocks: int | None = None,
-) -> DataFrame:
-    """Bucket-size accounting for the block-LSH pair join (r09 verdict
-    #1: the join's cost was an unmeasured asymptote) — run this BEFORE
-    a large pair job to see what the equi-join will pay. One-row frame:
-
-    - ``n_items`` distinct ``(id, sig)`` rows in;
-    - ``n_buckets`` / ``max_bucket`` / ``avg_bucket`` over the
-      ``(block_idx, block_val)`` key space;
-    - ``candidate_pairs`` = sum over buckets of C(size, 2) — the EXACT
-      number of join-output rows a ball-0 pair stage generates before
-      dedup/verify (each same-bucket pair costs one row even if it
-      also collides in another block).
-
-    The stats job is one 8-byte-keyed aggregation — linear, no pair
-    blow-up — so it is safe to run at any scale the hash stage itself
-    survives. If ``candidate_pairs`` approaches n_items^2 territory,
-    switch the pair call to the multi-index mode (``n_blocks=3,
-    block_ball=1`` — see :func:`_block_candidates`) or dedup exact
-    signatures first (identical-signature masses are TRUE duplicate
-    groups; collapse them to one representative before near-dup
-    pairing, which bounds every bucket by the distinct-signature
-    count)."""
-    if n_blocks is None:
-        n_blocks = max_hamming + 1
-    items = sigs.select(
-        F.col(id_col).alias("id"), F.col(sig_col).alias("sig")
-    ).distinct()
-    buckets = _block_rows(
-        items, sig_col="sig", n_blocks=n_blocks, n_bits=n_bits
-    ).groupBy("block_idx", "block_val").agg(
-        F.count(F.lit(1)).alias("sz")
-    )
-    n_items = items.count()
-    return buckets.agg(
-        F.lit(n_items).alias("n_items"),
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.max("sz").alias("max_bucket"),
-        F.round(F.avg("sz"), 6).alias("avg_bucket"),
-        F.sum(
-            (F.col("sz") * (F.col("sz") - 1) / 2).cast("long")
-        ).alias("candidate_pairs"),
-    )
-
-
-def hamming_near_pairs(
-    sigs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    sig_col: str = "dhash",
-    max_hamming: int = 4,
-    n_bits: int = 64,
-    n_blocks: int | None = None,
-    block_ball: int = 0,
-    allow_heuristic: bool = False,
-) -> DataFrame:
-    """Near-pairs over any 64-bit signature column: block LSH + Hamming
-    verify — the ``simhash_near_pairs`` join form generalized to a
-    caller-supplied signature (image dHash here).
-
-    Candidate generation is EXACT by pigeonhole only when some block
-    must match within the probed ball: splitting into ``n_blocks``
-    blocks, a pair within Hamming ``max_hamming`` has some block within
-    ``floor(max_hamming / n_blocks)`` (all blocks further would sum
-    past the radius), so exactness requires ``floor(max_hamming /
-    n_blocks) <= block_ball``. ``n_blocks`` defaults to ``max_hamming
-    + 1`` with ``block_ball=0`` (the r07 review caught the old
-    ``n_blocks=4`` default silently missing pairs at exactly Hamming 4
-    with one flipped bit per block); ``n_blocks=3, block_ball=1`` is
-    the exact MULTI-INDEX mode for web-scale inputs — ~28x fewer
-    random-collision candidates via wider blocks, same exact radius
-    (see :func:`_block_candidates` for the arithmetic and
-    :func:`block_bucket_stats` for the audit query). A violating
-    combination raises. Remainder bits (64 not divisible by n_blocks)
-    widen the LAST block, which only tightens buckets — uncovered bits
-    would also have been safe (all-blocks-equal still collides) but
-    waste selectivity. The block equi-join shuffles on
-    ``(block_idx, block_val)``; every candidate verifies JVM-side with
-    ``bit_count(xor)``. Returns ``(id_a, id_b, hamming)`` with
-    ``id_a < id_b``.
-    """
-    if n_blocks is None:
-        n_blocks = max_hamming + 1
-    if max_hamming // n_blocks > block_ball and not allow_heuristic:
-        # allow_heuristic is the simhash caller's documented
-        # high-recall/bounded-cost band (Manku-style); image dedup
-        # keeps the exact contract
-        raise ValueError(
-            "exact recall needs floor(max_hamming / n_blocks) <= "
-            f"block_ball (got max_hamming={max_hamming}, "
-            f"n_blocks={n_blocks}, block_ball={block_ball})"
-        )
-    return (
-        _block_candidates(
-            sigs.select(
-                F.col(id_col).alias("id"), F.col(sig_col).alias("sig")
-            ),
-            n_blocks=n_blocks,
-            n_bits=n_bits,
-            ball=block_ball,
-        )
-        .select(
-            "id_a",
-            "id_b",
-            F.bit_count(
-                F.col("sig_a").bitwiseXOR(F.col("sig_b"))
-            ).alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
+def hamming_near_pairs(sigs: DataFrame, *, sig_col: str = "dhash", **kw):
+    """:func:`..operators.dedup.hamming_near_pairs` keyed on the image
+    dHash column by default: block LSH + Hamming verify over any 64-bit
+    signature, never all-pairs. Returns ``(id_a, id_b, hamming)``."""
+    return _hamming_near_pairs(sigs, sig_col=sig_col, **kw)
 
 
 def video_frame_dhash(
@@ -824,7 +520,6 @@ def video_near_dup_pairs(
     min_match_frac: float = 0.8,
     n_bits: int = 64,
     n_blocks: int | None = None,
-    block_ball: int = 0,
 ) -> DataFrame:
     """Video-level near-dup via FRAME-HASH SET OVERLAP: two videos are
     near-dups when >= ``min_match_frac`` of the smaller one's distinct
@@ -836,9 +531,7 @@ def video_near_dup_pairs(
 
     Plan shape: per-video DISTINCT hash sets (tiny — 8 B x frames), the
     same :func:`_block_candidates` pigeonhole equi-join as
-    :func:`hamming_near_pairs` keyed straight on the video ids (so the
-    exact multi-index mode — ``n_blocks=3, block_ball=1`` — and the
-    :func:`block_bucket_stats` audit apply here unchanged), one
+    :func:`hamming_near_pairs` keyed straight on the video ids, one
     distinct + one hash-aggregate per video pair, broadcast-friendly
     per-video size join. Frame PIXELS appear nowhere; candidate
     generation is never all-pairs.
@@ -846,11 +539,10 @@ def video_near_dup_pairs(
     """
     if n_blocks is None:
         n_blocks = max_hamming + 1
-    if max_hamming // n_blocks > block_ball:
+    if max_hamming >= n_blocks:
         raise ValueError(
-            "exact recall needs floor(max_hamming / n_blocks) <= "
-            f"block_ball (got max_hamming={max_hamming}, "
-            f"n_blocks={n_blocks}, block_ball={block_ball})"
+            "exact recall needs max_hamming <= n_blocks - 1 (got "
+            f"max_hamming={max_hamming}, n_blocks={n_blocks})"
         )
     vs = frame_sigs.select(
         F.col(video_col).alias("vid"), F.col(sig_col).alias("sig")
@@ -860,7 +552,6 @@ def video_near_dup_pairs(
             vs.select(F.col("vid").alias("id"), "sig"),
             n_blocks=n_blocks,
             n_bits=n_bits,
-            ball=block_ball,
         )
         .filter(
             F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
@@ -1024,7 +715,6 @@ def image_tile_near_dup_pairs(
     max_hamming: int = 4,
     min_match_frac: float = 0.8,
     n_blocks: int | None = None,
-    block_ball: int = 0,
 ) -> DataFrame:
     """Crop-tolerant image near-dup via TILE-HASH SET OVERLAP — the
     video gate's machinery (:func:`video_near_dup_pairs`) applied to
@@ -1036,8 +726,7 @@ def image_tile_near_dup_pairs(
     single-tile collision is absorbed by the fraction threshold.
 
     Plan shape is inherited wholesale: per-image DISTINCT tile-hash
-    sets, the shared :func:`_block_candidates` pigeonhole equi-join
-    (multi-index mode and bucket-stats audit included), one
+    sets, the shared :func:`_block_candidates` pigeonhole equi-join, one
     aggregate per candidate pair, broadcast-friendly size join — never
     all-pairs. Returns ``(id_a, id_b, n_matched, match_frac)`` with
     ``id_a < id_b``.
@@ -1049,7 +738,6 @@ def image_tile_near_dup_pairs(
         max_hamming=max_hamming,
         min_match_frac=min_match_frac,
         n_blocks=n_blocks,
-        block_ball=block_ball,
     ).select(
         F.col("video_a").alias("id_a"),
         F.col("video_b").alias("id_b"),
@@ -1070,9 +758,8 @@ def _row_cdc_kernel(
     factory-nested per the pickle house rule.
 
     The tile tiers recover crops congruent to 0 or tile/2 (mod 32);
-    an arbitrary crop shifts every fixed tile. The audio tier's fix
-    (``audio._cdc_segment_kernel``) transfers, but NOT as the r11
-    sketch proposed (anchors from 1-D Gear over row/column SUMS):
+    an arbitrary crop shifts every fixed tile. Content-defined
+    chunking transfers, but NOT as the r11 sketch proposed (anchors from 1-D Gear over row/column SUMS):
     a column's sum runs over ALL rows, so cropping rows changes every
     column sum and no anchor survives a two-axis crop — the sum-
     anchored design only re-syncs strip crops. What IS crop-stable is
@@ -1100,8 +787,8 @@ def _row_cdc_kernel(
     (the decision is a function of content), cutting signature volume
     2^bits with no pair-machinery change. Returns
     ``rows(w, h, ch, pix) -> [(seg_idx, sig64), ...]``; ``ch == 3``
-    reduces to exact-floor mean luma first (channel-layout invariant
-    by the audio downmix argument)."""
+    reduces to exact-floor mean luma first (channel-layout invariant:
+    the same luma plane from any channel layout)."""
     import hashlib
 
     import numpy as np

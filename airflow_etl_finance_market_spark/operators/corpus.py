@@ -1144,9 +1144,13 @@ def token_budget_select(
                 )
             )
         )
-    finite = F.lit(0)
-    for s in splits:  # higher score -> LOWER bucket index
-        finite = finite + F.when(score <= F.lit(s), 1).otherwise(0)
+    # higher score -> LOWER bucket index: count the splits at or above
+    # the score. One array filter keeps the expression depth constant
+    # in the number of splits (a per-split add chain overflows the
+    # codegen stack near a thousand splits).
+    finite = F.size(
+        F.filter(F.array(*[F.lit(s) for s in splits]), lambda s: score <= s)
+    )
     bucket = F.when(score.isNull(), F.lit(len(splits) + 1)).otherwise(
         finite
     )

@@ -495,12 +495,8 @@ def simhash_near_pairs(
             .distinct()
             .filter(F.col("hamming") <= max_hamming)
         )
-    # the join branch IS the generalized block-LSH pair pipeline — one
-    # live copy (r07 review: this and the image-dHash path had drifted
-    # into near-verbatim twins); allow_heuristic covers the documented
-    # Manku-style max_hamming > n_blocks-1 recall band
-    from ..multimodal.phash import hamming_near_pairs
-
+    # allow_heuristic covers the documented Manku-style
+    # max_hamming > n_blocks - 1 recall band
     return hamming_near_pairs(
         sigs,
         id_col="id",
@@ -509,6 +505,113 @@ def simhash_near_pairs(
         n_bits=n_bits,
         n_blocks=n_blocks,
         allow_heuristic=True,
+    )
+
+
+def _block_widths(n_blocks: int, n_bits: int) -> list[int]:
+    """Per-block bit widths: equal splits, remainder widening the LAST
+    block (which only tightens buckets)."""
+    width = n_bits // n_blocks
+    return [width] * (n_blocks - 1) + [n_bits - width * (n_blocks - 1)]
+
+
+def _block_candidates(
+    items: DataFrame, *, n_blocks: int, n_bits: int
+) -> DataFrame:
+    """Pigeonhole candidate pairs: ``items`` is an ``(id, sig)`` frame;
+    returns ``(id_a, id_b, sig_a, sig_b)`` with ``id_a < id_b``.
+
+    Each signature explodes into ``n_blocks`` ``(block_idx, block_val)``
+    rows; two ``n_bits`` signatures within Hamming ``n_blocks - 1`` must
+    agree on at least one block, so the equi-join on those rows is an
+    EXACT candidate generator for that radius. Rows are NOT
+    deduplicated: a pair colliding in several blocks appears once per
+    collision, and the caller applies its own distinct.
+
+    The two join sides are PLAN-IDENTICAL on purpose: Spark reuses the
+    shuffled exchange (ReusedExchange) only for byte-equal subplans, so
+    the upstream signature stage evaluates once.
+    """
+    widths = _block_widths(n_blocks, n_bits)
+    shifts = [n_bits // n_blocks * j for j in range(n_blocks)]
+
+    def _block(sh: int, w: int):
+        shifted = F.shiftrightunsigned(F.col("sig"), sh)
+        if w >= 64:
+            # full-width block (n_blocks=1, the max_hamming=0 exact
+            # path): the mask literal (1<<64)-1 overflows a Java long
+            # and the AND would be the identity anyway
+            return shifted
+        return shifted.bitwiseAND(F.lit((1 << w) - 1))
+
+    # ``sig`` must be a real column here: posexplode cannot reference a
+    # column aliased in the same select (a lateral column alias)
+    blocks = items.select(
+        "*",
+        F.posexplode(
+            F.array(*[_block(sh, w) for sh, w in zip(shifts, widths)])
+        ).alias("block_idx", "block_val"),
+    )
+    a, b = blocks.alias("a"), blocks.alias("b")
+    return a.join(
+        b,
+        (F.col("a.block_idx") == F.col("b.block_idx"))
+        & (F.col("a.block_val") == F.col("b.block_val"))
+        & (F.col("a.id") < F.col("b.id")),
+    ).select(
+        F.col("a.id").alias("id_a"),
+        F.col("b.id").alias("id_b"),
+        F.col("a.sig").alias("sig_a"),
+        F.col("b.sig").alias("sig_b"),
+    )
+
+
+def hamming_near_pairs(
+    sigs: DataFrame,
+    *,
+    id_col: str = "doc_id",
+    sig_col: str = "sig",
+    max_hamming: int = 4,
+    n_bits: int = 64,
+    n_blocks: int | None = None,
+    allow_heuristic: bool = False,
+) -> DataFrame:
+    """Near-pairs over any 64-bit signature column: block LSH + Hamming
+    verify. Returns ``(id_a, id_b, hamming)`` with ``id_a < id_b``.
+
+    Candidate generation is EXACT by pigeonhole only when
+    ``max_hamming <= n_blocks - 1``; ``n_blocks`` defaults to
+    ``max_hamming + 1``. A violating combination raises unless
+    ``allow_heuristic`` accepts the bounded-cost, high-recall band
+    (the SimHash caller's Manku/Jain/Sarma configuration). The block
+    equi-join shuffles on ``(block_idx, block_val)`` and every
+    candidate verifies JVM-side with ``bit_count(xor)``; never
+    all-pairs.
+    """
+    if n_blocks is None:
+        n_blocks = max_hamming + 1
+    if max_hamming >= n_blocks and not allow_heuristic:
+        raise ValueError(
+            "exact recall needs max_hamming <= n_blocks - 1 (got "
+            f"max_hamming={max_hamming}, n_blocks={n_blocks})"
+        )
+    return (
+        _block_candidates(
+            sigs.select(
+                F.col(id_col).alias("id"), F.col(sig_col).alias("sig")
+            ),
+            n_blocks=n_blocks,
+            n_bits=n_bits,
+        )
+        .select(
+            "id_a",
+            "id_b",
+            F.bit_count(
+                F.col("sig_a").bitwiseXOR(F.col("sig_b"))
+            ).alias("hamming"),
+        )
+        .distinct()
+        .filter(F.col("hamming") <= max_hamming)
     )
 
 

@@ -174,9 +174,14 @@ def equi_depth_histogram(
             for i, q in enumerate(qs, start=1)
         ]
     )
-    bucket = F.lit(1)
-    for i in range(1, buckets):
-        bucket = bucket + F.when(F.col(value) > F.col(f"_b{i}"), 1).otherwise(0)
+    # 1 + the number of boundaries below the value, as one array filter
+    # so the expression depth stays constant in ``buckets``
+    bucket = F.lit(1) + F.size(
+        F.filter(
+            F.array(*[F.col(f"_b{i}") for i in range(1, buckets)]),
+            lambda b: F.col(value) > b,
+        )
+    )
     return (
         df.crossJoin(F.broadcast(bounds))
         .select(bucket.cast("long").alias("bucket"), F.col(value))

@@ -833,9 +833,8 @@ def pq_index(
     batch linear algebra, exactly the shape Catalyst HOFs pay an
     interpreted-lambda constant for. ``"arrow"`` (default) runs it as a
     vectorized numpy ``mapInPandas`` stage (map-only, partitioning
-    preserved, self-contained closure; ~7× the HOF throughput — the
-    same (b)-tier justification as the multimodal codecs). ``"sql"`` is
-    the pure-Catalyst reference used differentially in tests (its
+    preserved, self-contained closure; ~7× the HOF throughput). ``"sql"``
+    is the pure-Catalyst reference used differentially in tests (its
     ``_cell`` stamp composes :func:`assign_cells_frame` via an id join —
     reference semantics, not the scale path). Both are deterministic;
     a near-tie broken differently by summation order cannot change

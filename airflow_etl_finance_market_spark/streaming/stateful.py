@@ -494,16 +494,14 @@ def windowed_signature_ownership(
     retain: str = "1 hour",
     max_hamming: int = 4,
 ) -> DataFrame:
-    """Streaming SET-overlap media dedup, stage 1 of 2: per-window
-    subfingerprint OWNERSHIP against per-block keyed state — the
-    trim/crop-robust tiers' machinery (audio window / image tile /
-    video frame subfingerprints matched as sets) moved to the INGEST
+    """Streaming SET-overlap dedup, stage 1 of 2: per-window
+    subfingerprint OWNERSHIP against per-block keyed state — items
+    matched as SETS of 64-bit window subfingerprints at the INGEST
     edge, where ``dedup_by_signature`` only covers whole-content
-    signatures (r10 verdict, composition gap #6).
+    signatures.
 
-    Input: one row per (clip, window subfingerprint) —
-    ``audio_window_fingerprints(..., passthrough=(ts,))`` or the
-    tile/frame stages' output. Each row is exploded JVM-side into
+    Input: one row per (clip, window subfingerprint), carrying the
+    event-time column. Each row is exploded JVM-side into
     ``max_hamming + 1`` pigeonhole blocks and grouped by
     ``(block_idx, block_value)``; ``applyInPandasWithState`` keeps, per
     bucket, the registry of full hashes seen within the retention
@@ -531,7 +529,7 @@ def windowed_signature_ownership(
     row), so state is (unique-window arrival rate x retain x
     ``max_hamming + 1``), the same envelope as a windowed aggregate —
     NOT all content ever ingested. Re-uploads older than ``retain`` are
-    the stored-table batch tier's job (``audio_window_near_dup_pairs``);
+    the stored-table batch tier's job;
     the ingest edge's contract is the redelivery/re-encode window.
 
     Output (append): ``(id, ts, sig, owner_id, owner_ts)`` — one row

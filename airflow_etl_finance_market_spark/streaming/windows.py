@@ -146,16 +146,16 @@ def dedup_events(
 def dedup_by_signature(
     sigs: DataFrame,
     *,
-    sig_col: str = "afp",
+    sig_col: str = "sig",
     ts: str = "ts",
     watermark: str = "1 hour",
 ) -> DataFrame:
-    """Media dedup-on-ingest: keep one row per content SIGNATURE.
+    """Dedup-on-ingest: keep one row per content SIGNATURE.
 
-    The multimodal twin of :func:`dedup_events` — the key is not a
-    delivery id but a perceptual signature (audio fingerprint, image
-    dHash), so byte-DIFFERENT re-encodes of the same content collapse at
-    the stream edge before storage ever pays for them. Streaming frames
+    The content-keyed twin of :func:`dedup_events` — the key is not a
+    delivery id but a content signature (e.g. a normalized-text
+    fingerprint), so byte-DIFFERENT variants of the same content collapse
+    at the stream edge before storage ever pays for them. Streaming frames
     use ``dropDuplicatesWithinWatermark`` keyed on the signature:
     per-signature state is EVICTED once the watermark passes, so state
     is bounded by (watermark horizon x unique-content arrival rate) —

@@ -15,6 +15,11 @@ from pyspark.sql import functions as F
 #: exists to avoid. Unknown nodes now keep the unconditional repartition
 #: (fail-safe); the skip still fires exactly where it was measured to win
 #: (plain parquet scans, optionally projected/filtered).
+#: ``Range`` (spark.range) and DataSourceV2 relations are left out on
+#: purpose: the skip was measured only on file-source scans, and a V2
+#: relation's partition probe asks its connector to plan input
+#: partitions (which may reach the external source). Both keep the
+#: fail-safe repartition until a measurement says otherwise.
 _SCAN_LIKE_NODES = frozenset(
     {"Project", "Filter", "Relation", "LogicalRDD", "LocalRelation",
      "SubqueryAlias", "View"}
@@ -87,6 +92,8 @@ def fan_out(
     reused by a later groupBy on the same key; keyless round-robin
     would shuffle twice).
     """
+    if partitions is not None and partitions < 1:
+        raise ValueError(f"fan_out partitions must be >= 1, got {partitions}")
     n = partitions or df.sparkSession.sparkContext.defaultParallelism
     if partitions is None and not force and not df.isStreaming:
         # The skip applies only when the caller asked for the DEFAULT

@@ -157,6 +157,79 @@ def test_simhash_pairs_group_equals_join(spark, sf_dir):
     assert len(j) > 0
 
 
+class TestHammingNearPairs:
+    """The block-LSH join behind simhash_near_pairs, on synthetic 64-bit
+    signatures: the violating-combination raise, all-pairs exactness and
+    the plan contract (the pigeonhole radius cases live in
+    tests/test_phash.py)."""
+
+    @staticmethod
+    def _sig_frame(spark, rows):
+        return spark.createDataFrame(rows, "doc_id long, sig long")
+
+    def test_violating_explicit_blocks_raises(self, spark):
+        from airflow_etl_finance_market_spark.operators.dedup import (
+            hamming_near_pairs,
+        )
+
+        sigs = self._sig_frame(spark, [(0, 1)])
+        with pytest.raises(ValueError, match="exact recall"):
+            hamming_near_pairs(sigs, max_hamming=4, n_blocks=4)
+        # the bounded-cost band is opt-in
+        assert hamming_near_pairs(
+            sigs, max_hamming=4, n_blocks=4, allow_heuristic=True
+        ).count() == 0
+
+    def test_matches_all_pairs_reference(self, spark):
+        """Random signatures plus planted near copies: the verified pair
+        set equals the all-pairs Python reference within the radius."""
+        import random
+
+        from airflow_etl_finance_market_spark.operators.dedup import (
+            hamming_near_pairs,
+        )
+
+        rng = random.Random(7)
+        sigs = [rng.getrandbits(64) for _ in range(40)]
+        for k in range(20):
+            flips = rng.sample(range(64), rng.randint(0, 5))
+            v = sigs[k]
+            for b in flips:
+                v ^= 1 << b
+            sigs.append(v)
+        signed = [v - (1 << 64) if v >> 63 else v for v in sigs]
+        rows = list(enumerate(signed))
+        want = {
+            (i, j, bin(sigs[i] ^ sigs[j]).count("1"))
+            for i in range(len(sigs))
+            for j in range(i + 1, len(sigs))
+            if bin(sigs[i] ^ sigs[j]).count("1") <= 4
+        }
+        got = {
+            (r.id_a, r.id_b, r.hamming)
+            for r in hamming_near_pairs(
+                self._sig_frame(spark, rows), max_hamming=4
+            ).collect()
+        }
+        assert got == want
+        assert len(want) >= 15
+
+    def test_pair_plan_is_equi_join_never_cartesian(self, spark):
+        """Candidate generation is a block equi-join (shuffle on block
+        values), never CartesianProduct / all-pairs, and verification is
+        JVM-side bit_count (no Python in the pair stage)."""
+        from airflow_etl_finance_market_spark.operators.dedup import (
+            hamming_near_pairs,
+        )
+
+        sigs = self._sig_frame(spark, [(i, i * 7919) for i in range(10)])
+        df = hamming_near_pairs(sigs, max_hamming=4)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "CartesianProduct" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
+        assert "bit_count" in plan
+
+
 class TestWinnowFingerprints:
     def test_shared_excerpt_guarantee(self, spark):
         """Winnowing guarantee: documents sharing a run of >= window+ngram-1

@@ -219,159 +219,6 @@ class TestImageDhashOnSpark:
         assert "bit_count" in plan
 
 
-class TestMultiIndexAndBucketStats:
-    """r09 verdict #1: the block-LSH pair join keyed on ~13-bit block
-    values is exact and sub-linear at measured scale but grows
-    ~n^2/2048 at web scale. These tests pin (a) the bucket-size audit
-    query, (b) the exact multi-index mode's candidate-count win on an
-    adversarially skewed signature set, and (c) that the mode stays
-    EXACT — identical verified pairs, including at exactly Hamming 4."""
-
-    @staticmethod
-    def _sig(seed: int) -> int:
-        return int.from_bytes(
-            hashlib.md5(b"mih%d" % seed).digest()[:8], "big"
-        ) & ((1 << 63) - 1)  # keep positive: createDataFrame longs
-
-    def _skewed_frame(self, spark, n=60):
-        """n signatures sharing the LOW 12 BITS (= block 0 of the
-        5-block default scheme, one full bucket) but random elsewhere —
-        mutually far in Hamming distance, so every same-bucket
-        candidate is a wasted verify."""
-        rows = [(i, (self._sig(i) & ~0xFFF) | 0xABC) for i in range(n)]
-        return spark.createDataFrame(rows, "doc_id long, dhash long")
-
-    def test_bucket_stats_count_the_skewed_bucket(self, spark):
-        from airflow_etl_finance_market_spark.multimodal.phash import (
-            block_bucket_stats,
-        )
-
-        stats = block_bucket_stats(self._skewed_frame(spark)).first()
-        assert stats.n_items == 60
-        assert stats.max_bucket == 60  # the planted (block 0, 0xABC) mass
-        # every pair collides in block 0: candidate_pairs >= C(60, 2)
-        assert stats.candidate_pairs >= 60 * 59 // 2
-
-    def test_multi_index_bounds_skewed_candidates(self, spark):
-        """The adversarial case the r09 verdict asked for: on the
-        shared-low-bits set the ball-0 default generates the full
-        C(60,2) candidate blow-up while 3x~21-bit blocks with ball-1
-        probes scatter the shared 12 bits across a wider key space —
-        candidates stay bounded, verified output identical (empty)."""
-        from airflow_etl_finance_market_spark.multimodal.phash import (
-            _block_candidates,
-            hamming_near_pairs,
-        )
-        from pyspark.sql import functions as F
-
-        frame = self._skewed_frame(spark)
-        items = frame.select(
-            F.col("doc_id").alias("id"), F.col("dhash").alias("sig")
-        )
-        ball0 = _block_candidates(items, n_blocks=5, n_bits=64).count()
-        mih = _block_candidates(
-            items, n_blocks=3, n_bits=64, ball=1
-        ).count()
-        assert ball0 >= 60 * 59 // 2
-        assert mih < ball0 / 4  # bounded, not the full bucket blow-up
-        # and the verified pair sets agree (here: no real near-dups)
-        assert hamming_near_pairs(frame).count() == 0
-        assert (
-            hamming_near_pairs(frame, n_blocks=3, block_ball=1).count()
-            == 0
-        )
-
-    def test_multi_index_exact_same_pairs_including_hamming_4(self, spark):
-        """Exactness: a planted family at Hamming 0/2/4 (the radius
-        boundary, bits spread 2+2 across different 21-bit blocks — the
-        worst case for ball-1: min per-block distance exactly 1 needs
-        the flip enumeration) yields the SAME verified pairs under the
-        default and the multi-index mode."""
-        from airflow_etl_finance_market_spark.multimodal.phash import (
-            hamming_near_pairs,
-        )
-
-        base = self._sig(999)
-        rows = [
-            (1, base),
-            (2, base ^ 0b11),  # Hamming 2, inside block 0
-            # Hamming 4 spread 2/1/1 over the 21-bit blocks: min
-            # per-block distance is exactly 1, so ONLY the ball-1 flip
-            # enumeration can catch it (a ball-0 3-block split would
-            # miss it — which is why that combination raises)
-            (3, base ^ (1 << 1) ^ (1 << 20) ^ (1 << 25) ^ (1 << 50)),
-            # Hamming 5 from base: outside the radius vs id 1
-            (4, base ^ 0b11111),
-            (5, self._sig(1000)),  # unrelated
-        ]
-        frame = spark.createDataFrame(rows, "doc_id long, dhash long")
-        want = sorted(
-            (r.id_a, r.id_b, r.hamming)
-            for r in hamming_near_pairs(frame, max_hamming=4).collect()
-        )
-        got = sorted(
-            (r.id_a, r.id_b, r.hamming)
-            for r in hamming_near_pairs(
-                frame, max_hamming=4, n_blocks=3, block_ball=1
-            ).collect()
-        )
-        assert want == got
-        assert (1, 3, 4) in want  # the radius-boundary pair is present
-
-    def test_violating_ball_combination_raises(self, spark):
-        from airflow_etl_finance_market_spark.multimodal.phash import (
-            hamming_near_pairs,
-        )
-
-        frame = spark.createDataFrame(
-            [(1, 7)], "doc_id long, dhash long"
-        )
-        with pytest.raises(ValueError, match="exact recall"):
-            # floor(4/2) = 2 > ball 1: two blocks can't cover radius 4
-            hamming_near_pairs(
-                frame, max_hamming=4, n_blocks=2, block_ball=1
-            )
-        with pytest.raises(NotImplementedError):
-            from airflow_etl_finance_market_spark.multimodal.phash import (
-                _block_candidates,
-            )
-            from pyspark.sql import functions as F
-
-            _block_candidates(
-                frame.select(
-                    F.col("doc_id").alias("id"),
-                    F.col("dhash").alias("sig"),
-                ),
-                n_blocks=2,
-                n_bits=64,
-                ball=2,
-            )
-
-    def test_ball1_full_width_block_raises(self, spark):
-        """r10 ADVICE: with a 64-bit-wide block, the ball-1 flip mask
-        for bit 63 saturates the double->long cast to Long.MAX_VALUE
-        and silently probes a wrong mask — must raise, not mis-probe."""
-        from pyspark.sql import functions as F
-
-        from airflow_etl_finance_market_spark.multimodal.phash import (
-            _block_candidates,
-        )
-
-        frame = spark.createDataFrame(
-            [(1, 7)], "doc_id long, dhash long"
-        ).select(
-            F.col("doc_id").alias("id"), F.col("dhash").alias("sig")
-        )
-        with pytest.raises(NotImplementedError, match="63"):
-            _block_candidates(frame, n_blocks=1, n_bits=64, ball=1)
-        # 32-bit-wide blocks stay allowed: flip <= 31 < the sign bit.
-        assert (
-            _block_candidates(frame, n_blocks=2, n_bits=64, ball=1)
-            .count()
-            == 0
-        )
-
-
 def test_hamming_exactly_max_distance_one_bit_per_block(spark):
     """r07 review regression: a pair at EXACTLY max_hamming=4 with one
     flipped bit in each 16-bit quarter shared no block under the old
@@ -724,17 +571,6 @@ class TestTileCropNearDups:
         ]
         whole_pairs = hamming_near_pairs(image_dhash(media)).collect()
         assert whole_pairs == []  # the pinned limitation, same data
-        # the exact multi-index mode rides the same set-overlap path
-        # (shared _block_candidates) and returns the identical gate
-        mih = image_tile_near_dup_pairs(
-            image_tile_dhash(media),
-            min_match_frac=0.8,
-            n_blocks=3,
-            block_ball=1,
-        ).collect()
-        assert [
-            (r.id_a, r.id_b, r.n_matched, r.match_frac) for r in mih
-        ] == [(1, 2, 9, 1.0)]
 
     def test_misaligned_crop_degrades_honestly(self, spark):
         """An off-grid crop (offset 40,40 — 8 pixels past the tile
@@ -880,7 +716,7 @@ class TestTileCropNearDups:
 
     def test_tile_pair_plan_is_equi_join_never_cartesian(self, spark):
         """The tile set-overlap chain (shared with the video gate via
-        _block_rows) must candidate-generate through the block equi-join
+        _block_candidates) must candidate-generate through the block equi-join
         — never CartesianProduct / broadcast nested loop."""
         from airflow_etl_finance_market_spark.multimodal.phash import (
             image_tile_dhash,

@@ -699,6 +699,33 @@ def test_row_cdc_pair_join_reuses_signature_exchange(spark):
     assert "CartesianProduct" not in final
 
 
+def test_hamming_pair_join_reuses_signature_exchange(spark):
+    """The block-LSH pair stage is a pigeonhole self-join: both sides
+    must stay PLAN-IDENTICAL so the shuffled exchange is reused
+    (ReusedExchange) and the upstream signature stage evaluates ONCE
+    (an innocent projection rename on one side silently doubles it).
+    Full-width block (max_hamming=0) path."""
+    from airflow_etl_finance_market_spark.operators.dedup import (
+        hamming_near_pairs,
+    )
+
+    # an RDD-backed frame has no size estimate, so the planner starts from
+    # the shuffled sort-merge form (a sized Range would broadcast up front)
+    sigs = spark.createDataFrame(
+        [(i, (i % 32) * 7919) for i in range(64)], "doc_id long, sig long"
+    )
+    df = hamming_near_pairs(sigs, max_hamming=0)
+    # ids i and i + 32 share a signature; collect() runs THIS plan, so
+    # AQE can surface ReusedExchange in its FINAL executed plan
+    assert len(df.collect()) == 32
+    final = (
+        df._jdf.queryExecution().executedPlan().toString()
+        .split("== Initial Plan ==")[0]
+    )
+    assert "ReusedExchange" in final
+    assert "CartesianProduct" not in final
+
+
 def test_token_budget_boundary_sort_confined_to_one_bucket(spark, sf_dir):
     """token_budget_select's scale contract: the corpus-wide path is
     filter + union (NO global sort); exactly ONE single-partition
@@ -756,8 +783,12 @@ def test_pagerank_round_is_single_join_plus_aggregate(spark, sf_dir):
     join feeding a zero-seeded aggregate — the old per-round deg join
     and nodes LEFT-OUTER (+COALESCE) must not come back. The out-degree
     rides the checkpointed edge frame instead."""
+    from airflow_etl_finance_market_spark.harness_markets import (
+        PAGERANK_ITERATIONS,
+    )
+
     plan = plan_of(harness.queries()["part_supplier_pagerank"](spark, sf_dir))
     assert "LeftOuter" not in plan          # per-round left join gone
     assert "CartesianProduct" not in plan
     # one zero-seed Union per round feeds the round aggregate
-    assert plan.count("Union") >= 3
+    assert plan.count("Union") >= PAGERANK_ITERATIONS

@@ -818,69 +818,8 @@ def test_funnel_retires_completed_and_idle_keys(spark, tmp_path):
     ]
 
 
-def test_media_signature_dedup_stream_equals_batch(spark, tmp_path):
-    """dedup_by_signature: byte-different re-encodes of the same audio
-    collapse to one survivor at the stream edge (fingerprint-keyed
-    dropDuplicatesWithinWatermark), and the batch twin agrees on the
-    surviving signature set. Quarantined payloads never reach the
-    dedup state."""
-    import hashlib
-
-    from airflow_etl_finance_market_spark.multimodal.audio import (
-        _stdlib_wav_codec,
-        audio_fingerprints,
-    )
-    from airflow_etl_finance_market_spark.streaming import dedup_by_signature
-
-    _, _, enc, _ = _stdlib_wav_codec()
-
-    def lattice(seed: bytes, n: int = 8000) -> bytes:
-        out = bytearray()
-        i = 0
-        while len(out) < n:
-            out += hashlib.md5(seed + bytes([i & 0xFF, i >> 8])).digest()
-            i += 1
-        return bytes(out[:n])
-
-    rows = []
-    for fam in range(3):
-        x = [(v - 128) << 8 for v in lattice(bytes([fam]))]
-        base_us = 1_700_000_000_000_000 + fam * 1_000_000
-        rows.append((fam * 10, base_us, bytearray(enc(8000, [x]))))
-        rows.append((fam * 10 + 1, base_us, bytearray(enc(8000, [x, x]))))
-    rows.append((90, 1_700_000_000_000_000, bytearray(b"junk")))
-    in_dir = str(tmp_path / "media_in")
-    spark.createDataFrame(
-        rows, "doc_id long, ts long, payload binary"
-    ).coalesce(1).write.mode("overwrite").parquet(in_dir)
-
-    def pipeline(media):
-        fps = audio_fingerprints(
-            media.withColumn("ts", F.expr("timestamp_micros(ts)")),
-            passthrough=("ts",),
-        )
-        return dedup_by_signature(fps, sig_col="afp", ts="ts")
-
-    batch = pipeline(
-        spark.read.schema("doc_id long, ts long, payload binary").parquet(
-            in_dir
-        )
-    )
-    stream = pipeline(
-        spark.readStream.schema(
-            "doc_id long, ts long, payload binary"
-        ).parquet(in_dir)
-    )
-    got = run_available_now(stream, "media_dedup_eq", output_mode="append")
-    stream_sigs = sorted(r.afp for r in got.collect())
-    batch_sigs = sorted(r.afp for r in batch.collect())
-    assert stream_sigs == batch_sigs
-    assert len(stream_sigs) == 3  # one per family; junk quarantined
-    assert all(r.doc_id // 10 in (0, 1, 2) for r in got.collect())
-
-
 def test_image_signature_dedup_stream_equals_batch(spark, tmp_path):
-    """The image twin: dedup_by_signature(sig_col='dhash') over
+    """dedup_by_signature(sig_col='dhash') over
     image_dhash(passthrough=('ts',)) — re-encodes (PNG vs GIF palette)
     of the same pixels collapse at the stream edge, stream ≡ batch."""
     import hashlib
@@ -933,65 +872,46 @@ def test_image_signature_dedup_stream_equals_batch(spark, tmp_path):
 
 
 def test_media_signature_dedup_carries_state_across_batches(spark, tmp_path):
-    """A re-encode arriving in a LATER micro-batch (same event time,
-    inside the watermark) must still dedup — dropDuplicatesWithinWatermark
-    state carries across batch boundaries until the watermark passes."""
-    import hashlib
-    import os
-
-    from airflow_etl_finance_market_spark.multimodal.audio import (
-        _stdlib_wav_codec,
-        audio_fingerprints,
-    )
+    """A repeated signature (a re-encode's perceptual hash) arriving in a
+    LATER micro-batch (1 s later, inside the watermark) must still dedup:
+    dropDuplicatesWithinWatermark state carries across batch boundaries
+    until the watermark passes. The batch twin keeps one row per
+    signature too."""
     from airflow_etl_finance_market_spark.streaming import dedup_by_signature
 
-    _, _, enc, _ = _stdlib_wav_codec()
-
-    def lattice(seed: bytes, n: int = 8000) -> bytes:
-        out = bytearray()
-        i = 0
-        while len(out) < n:
-            out += hashlib.md5(seed + bytes([i & 0xFF, i >> 8])).digest()
-            i += 1
-        return bytes(out[:n])
-
-    x = [(v - 128) << 8 for v in lattice(b"xbatch")]
-    y = [(v - 128) << 8 for v in lattice(b"other")]
     t0 = 1_700_000_000_000_000
+    sig_x, sig_y = 0x0123_4567_89AB_CDEF, -0x7654_3210_FEDC_BA99
+    batches = [
+        [(1, t0, sig_x), (2, t0, sig_y)],
+        [(3, t0 + 1_000_000, sig_x)],  # repeat of doc 1's signature
+    ]
     in_dir = tmp_path / "in"
-    # batch 0: original (mono) + an unrelated clip
-    spark.createDataFrame(
-        [(1, t0, bytearray(enc(8000, [x]))), (2, t0, bytearray(enc(8000, [y])))],
-        "doc_id long, ts long, payload binary",
-    ).coalesce(1).write.parquet(str(in_dir / "b0"))
-    # batch 1: the stereo re-encode of clip 1, 1 s later (within watermark)
-    spark.createDataFrame(
-        [(3, t0 + 1_000_000, bytearray(enc(8000, [x, x])))],
-        "doc_id long, ts long, payload binary",
-    ).coalesce(1).write.parquet(str(in_dir / "b1"))
-    for i in range(2):
+    for i, rows in enumerate(batches):
         d = str(in_dir / f"b{i}")
+        spark.createDataFrame(
+            rows, "doc_id long, ts long, sig long"
+        ).coalesce(1).write.parquet(d)
         for f in os.listdir(d):
             if f.endswith(".parquet"):
                 os.utime(f"{d}/{f}", (1_700_000_000 + i,) * 2)
     stream = (
-        spark.readStream.schema("doc_id long, ts long, payload binary")
+        spark.readStream.schema("doc_id long, ts long, sig long")
         .option("maxFilesPerTrigger", 1)
         .parquet(str(in_dir / "b*"))
         .withColumn("ts", F.expr("timestamp_micros(ts)"))
     )
     got = run_available_now(
-        dedup_by_signature(
-            audio_fingerprints(stream, passthrough=("ts",)),
-            sig_col="afp",
-            ts="ts",
-            watermark="1 hour",
-        ),
-        "media_dedup_xbatch",
+        dedup_by_signature(stream, sig_col="sig", ts="ts", watermark="1 hour"),
+        "sig_dedup_xbatch",
         output_mode="append",
     )
-    rows = sorted((r.doc_id for r in got.collect()))
-    assert rows == [1, 2]  # doc 3's re-encode deduped ACROSS the boundary
+    assert sorted(r.doc_id for r in got.collect()) == [1, 2]
+    batch = spark.read.parquet(str(in_dir / "b*")).withColumn(
+        "ts", F.expr("timestamp_micros(ts)")
+    )
+    assert sorted(
+        r.sig for r in dedup_by_signature(batch, sig_col="sig").collect()
+    ) == sorted([sig_x, sig_y])
 
 
 # ---------------------------------------------------------------------------
@@ -1195,76 +1115,6 @@ def test_windowed_signature_state_eviction_past_retain(spark, tmp_path):
     v = windowed_dedup_verdicts(tbl.filter("doc_id >= 0"))
     got = {r.doc_id: r.is_duplicate for r in v.collect()}
     assert got == {1: False, 2: False}
-
-
-def test_audio_windowed_dedup_ingest_stream_equals_batch(spark, tmp_path):
-    """End-to-end media shape (the gate's pipeline): WAV payloads →
-    audio_window_fingerprints(passthrough=ts) → ownership → verdicts.
-    A window-aligned trim and its stereo re-encode arriving in LATER
-    micro-batches dedup against the original via state carried across
-    batch boundaries; the unrelated family survives; stream == batch."""
-    from airflow_etl_finance_market_spark.fixtures import (
-        wav_trim_family_members,
-    )
-    from airflow_etl_finance_market_spark.multimodal.audio import (
-        audio_window_fingerprints,
-    )
-    from airflow_etl_finance_market_spark.streaming import (
-        windowed_dedup_verdicts,
-        windowed_signature_ownership,
-    )
-
-    members = wav_trim_family_members()
-    fams = {fam: members(f"wsd media {fam}") for fam in (1, 2)}
-    batches = [
-        [(fam * 10, _WSD_T0, bytearray(fams[fam][0])) for fam in fams],
-        [(fam * 10 + 1, _WSD_T0 + 600_000_000, bytearray(fams[fam][1]))
-         for fam in fams],
-        [(fam * 10 + 2, _WSD_T0 + 1_200_000_000, bytearray(fams[fam][2]))
-         for fam in fams],
-        [(-1, _WSD_T0 + 10_800_000_000,
-          bytearray(fams[1][0]))],  # sentinel: flushes the watermark
-    ]
-    in_dir = tmp_path / "wsd_audio"
-    for i, rows in enumerate(batches):
-        d = str(in_dir / f"b{i}")
-        spark.createDataFrame(
-            rows, "doc_id long, tsu long, payload binary"
-        ).coalesce(1).write.parquet(d)
-        for f in os.listdir(d):
-            if f.endswith(".parquet"):
-                os.utime(f"{d}/{f}", (1_700_000_000 + i,) * 2)
-
-    def pipeline(media):
-        fps = audio_window_fingerprints(
-            media.withColumn("ts", F.expr("timestamp_micros(tsu)")),
-            passthrough=("ts",),
-        )
-        own = windowed_signature_ownership(
-            fps, delay="5 minutes", retain="1 hour", max_hamming=4
-        )
-        if own.isStreaming:
-            own = run_available_now(
-                own, "wsd_audio_own", output_mode="append"
-            )
-        return windowed_dedup_verdicts(
-            own.filter("doc_id >= 0"), min_match_frac=0.8
-        )
-
-    schema = "doc_id long, tsu long, payload binary"
-    batch_v = _rows(pipeline(spark.read.schema(schema).parquet(
-        str(in_dir / "b*"))))
-    stream_v = _rows(pipeline(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir / "b*"))
-    ))
-    assert stream_v == batch_v
-    got = {r[0]: (r[5], r[6]) for r in stream_v}
-    for fam in (1, 2):
-        assert got[fam * 10] == (False, None)  # the original survives
-        assert got[fam * 10 + 1] == (True, fam * 10)  # aligned trim
-        assert got[fam * 10 + 2] == (True, fam * 10)  # stereo re-encode
 
 
 def test_windowed_dedup_checkpoint_restart_restores_registry(

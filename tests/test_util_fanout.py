@@ -9,7 +9,8 @@ flagged. These tests pin the r16 ALLOWLIST semantics:
 - any derived frame (joins, set ops, distinct — including node names the
   old blocklist had never heard of, e.g. Except) keeps the repartition;
 - an explicit ``partitions=n`` is honored unconditionally (the skip
-  applies only to the default defaultParallelism fan-out).
+  applies only to the default defaultParallelism fan-out), and a count
+  below 1 is rejected.
 """
 
 from __future__ import annotations
@@ -88,3 +89,9 @@ def test_fan_out_honors_explicit_partition_count(wide_parquet):
 def test_fan_out_force_always_repartitions(wide_parquet):
     out = fan_out(wide_parquet, "doc_id", force=True)
     assert "RepartitionByExpression" in analyzed(out)
+
+
+@pytest.mark.parametrize("bad", [0, -1])
+def test_fan_out_rejects_partitions_below_one(spark, bad):
+    with pytest.raises(ValueError, match=">= 1"):
+        fan_out(spark.range(3), partitions=bad)
